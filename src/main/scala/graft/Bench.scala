@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
 
   /** PASS-2 re-run cutoff from pass-1 `(seconds, succeeded)` measurements:
@@ -47,7 +48,7 @@ object Bench {
       try {
         spark.read.parquet(s"$sfDir/$tbl.parquet")
           .write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     // compile the shared text-pipeline codegen once by running the
     // REGISTERED first-in-sort-order text query (hand-copying its
@@ -57,7 +58,7 @@ object Bench {
     try {
       SparkEntry.queries.get("q100_type_token")
         .foreach(fn => fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // force FULL materialization of every output column via the noop sink —
     // count() would let Catalyst prune the very expressions being measured
     // local-iteration filter: SPARK_GRAFT_ONLY=q60,q65 times just those
@@ -91,7 +92,7 @@ object Bench {
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name: ${e.getMessage}"); false }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
@@ -152,7 +153,7 @@ object Bench {
       val p = java.nio.file.Paths.get("target", "bench_full.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // short-key line: adaptive format bounded ≤ MaxShortLine chars — the
     // suite outgrew the fixed format (1861 chars at 157 queries inside the
     // 2000-char driver tail window; ~170 queries would push its START out)

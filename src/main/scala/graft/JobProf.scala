@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev tool: run selected queries once (noop sink, same session shape as
   * [[Bench]]) with a listener that prints every Spark JOB's wall time and
@@ -46,7 +47,7 @@ object JobProf {
     for (tbl <- Seq("orders", "lineitem", "events", "documents", "embeddings")) {
       try spark.read.parquet(s"$sfDir/$tbl.parquet")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     args.foreach { n =>
       System.err.println(s"\n########## $n ##########")

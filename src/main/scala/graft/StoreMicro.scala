@@ -39,8 +39,7 @@ object StoreMicro {
     def run(scenario: String, src: graft.sources.WritableSource,
         lookup: Option[SparkSession => Double]): Unit = {
       val storePath = src match {
-        case s: graft.sources.LogUpsertSource => s.path
-        case s: graft.sources.BucketedLogUpsertSource => s.path
+        case s: graft.sources.GenLogStore => s.path
         case s => sys.error(s"StoreMicro drives the log stores only, got $s")
       }
       val every = math.max(1, appends / 10)

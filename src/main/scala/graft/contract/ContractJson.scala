@@ -99,10 +99,9 @@ object ContractJson {
       s"""{"kind":"partitioned_parquet","path":${q(p)},"keys":${arr(keys.map(q))}}"""
     case graft.sources.BucketedParquetSource(p, keys, b) =>
       s"""{"kind":"bucketed_parquet","path":${q(p)},"keys":${arr(keys.map(q))},"buckets":$b}"""
-    // boundFiles is a write-path layout knob, not contract state — it is
-    // not serialized, and a deserialized store gets the batch default
-    case graft.sources.LogUpsertSource(p, keys, ce, _) =>
-      s"""{"kind":"log_upsert","path":${q(p)},"keys":${arr(keys.map(q))},"compact_every":$ce}"""
+    case graft.sources.LogUpsertSource(p, keys, ce, bf) =>
+      s"""{"kind":"log_upsert","path":${q(p)},"keys":${arr(keys.map(q))},"compact_every":$ce,""" +
+        s""""bound_files":$bf}"""
     case graft.sources.BucketedLogUpsertSource(p, keys, b, ce) =>
       s"""{"kind":"bucketed_log","path":${q(p)},"keys":${arr(keys.map(q))},""" +
         s""""buckets":$b,"compact_every":$ce}"""
@@ -144,11 +143,13 @@ object ContractJson {
       case "bucketed_parquet" => graft.sources.BucketedParquetSource(
         m("path").toString, m("keys").asInstanceOf[Seq[Any]].map(_.toString),
         m("buckets").toString.toDouble.toInt)
-      // compact_every defaults for JSONs persisted before the r15 policy
+      // compact_every and bound_files default for JSONs persisted before
+      // they were serialized
       case "log_upsert" => graft.sources.LogUpsertSource(
         m("path").toString, m("keys").asInstanceOf[Seq[Any]].map(_.toString),
         m.get("compact_every").map(_.toString.toDouble.toInt)
-          .getOrElse(graft.sources.GenLog.defaultAutoCompactEvery))
+          .getOrElse(graft.sources.GenLog.defaultAutoCompactEvery),
+        m.get("bound_files").forall(_.asInstanceOf[Boolean]))
       case "bucketed_log" => graft.sources.BucketedLogUpsertSource(
         m("path").toString, m("keys").asInstanceOf[Seq[Any]].map(_.toString),
         m("buckets").toString.toDouble.toInt,
