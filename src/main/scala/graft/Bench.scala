@@ -19,25 +19,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.build()
     // OPTIONAL split-size override for tools/scaleup.py's equal-parallelism
     // scale measurements: the test tables are single small parquet files,
     // so the codegen'd scan+kernel stage gets size/128MB tasks — at 100 TB
     // splits abound and per-row cost is the constraint, so the scale curve
     // pins BOTH scales to small splits and measures per-row growth. Unset
-    // (the driver's rounds), behavior is stock.
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").foreach { v =>
-      builder.config("spark.sql.files.maxPartitionBytes", v)
-        .config("spark.sql.files.openCostInBytes", "65536")
+    // (the default), behavior is stock. Both keys are runtime SQL confs,
+    // so they apply to the built session.
+    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES").foreach { raw =>
+      spark.conf.set("spark.sql.files.maxPartitionBytes", LocalSession.parsePositiveInt(
+        "SPARK_GRAFT_MAX_PARTITION_BYTES", Some(raw), default = 0).toLong)
+      spark.conf.set("spark.sql.files.openCostInBytes", 65536L)
     }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT + parquet reader + codegen paths, so the first
     // timed query doesn't absorb session startup. EVERY table warms, not
     // just lineitem — the alphabetically-first query per table was
@@ -76,12 +70,7 @@ object Bench {
     // the MIN is recorded — the repeat lands outside the contention/JIT
     // window that inflated the first. Bounded cost: ≤ one extra pass over
     // only the expensive tail.
-    val repeatThreshold = sys.env.get("SPARK_GRAFT_REPEAT_SEC")
-      .flatMap { v =>
-        val p = scala.util.Try(v.toDouble).toOption
-        if (p.isEmpty) System.err.println(s"[bench] bad SPARK_GRAFT_REPEAT_SEC '$v', using 1.0")
-        p
-      }.getOrElse(1.0)
+    val repeatThreshold = 1.0
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     // (seconds, succeeded): a failed run must never replace a successful
@@ -135,12 +124,9 @@ object Bench {
     // name instead (and the correctness gate flags them loudly anyway).
     val results = finals.collect { case (n, t, true) => n -> t }.toMap
     val failed = finals.collect { case (n, _, false) => n }.sorted
-    // The driver records only the LAST 2000 output chars (measured from
-    // BENCH_r01/r02: tail_len 2000, metric line truncated at its START →
-    // "parsed": null both rounds). The FINAL line must therefore be a
-    // self-contained JSON comfortably under ~1900 chars: query keys are
-    // shortened to their qNN prefix (unique by construction) at centisecond
-    // precision (~1.3 KB at 96 queries). The full-name line prints FIRST so
+    // The FINAL line is parsed out of a 2000-char tail window (see
+    // shortLine), with query keys shortened to their qNN prefix
+    // (unique by construction). The full-name line prints FIRST so
     // humans and BENCH_NOTES still get it when reading the whole log.
     val sorted = results.toSeq.sortBy(_._1)
     val full = fullLine(sorted, sfDir, failed)
@@ -154,9 +140,7 @@ object Bench {
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"))
     } catch { case NonFatal(_) => () }
-    // short-key line: adaptive format bounded ≤ MaxShortLine chars — the
-    // suite outgrew the fixed format (1861 chars at 157 queries inside the
-    // 2000-char driver tail window; ~170 queries would push its START out)
+    // short-key line, bounded ≤ MaxShortLine chars (see shortLine)
     println(shortLine(sorted.map { case (k, v) => k.takeWhile(_ != '_') -> v },
       nFailed = failed.size))
     System.out.flush()
@@ -166,20 +150,6 @@ object Bench {
   // ---------- output lines (private[graft] so the length bound is spec-gated) ----------
 
   private def fmt2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-  // centisecond precision only where it's information: a 12.3 s query's
-  // hundredths are run-to-run noise, and the saved char is tail headroom
-  private def fmtAdaptive(v: Double) =
-    (if (v < 10) "%.2f" else "%.1f").formatLocal(java.util.Locale.ROOT, v)
-
-  private def jsonLine(entries: Seq[(String, Double)], fmt: Double => String,
-      sfSuffix: String, totalFmt: Double => String = null): String = {
-    val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val total = entries.map(_._2).sum // from the entries printed, not the outer map
-    // the TOTAL stays in seconds even when a rung switches the per-query
-    // unit (rung 4 deciseconds) — the driver's headline metric is seconds
-    val tf = if (totalFmt == null) fmt else totalFmt
-    s"""{"metric":"total","value":${tf(total)},"unit":"sec","queries":$qs$sfSuffix}"""
-  }
 
   private[graft] def fullLine(entries: Seq[(String, Double)], sfDir: String,
       failed: Seq[String] = Nil): String = {
@@ -188,35 +158,27 @@ object Bench {
     // backslash in a path
     val failSuffix = if (failed.isEmpty) ""
       else s""","failed":${failed.map(Verify.q).mkString("[", ",", "]")}"""
-    jsonLine(entries, fmt2, s""","sf":${Verify.q(sfDir)}$failSuffix""")
+    val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt2(v) }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${fmt2(entries.map(_._2).sum)},"unit":"sec","queries":$qs,"sf":${Verify.q(sfDir)}$failSuffix}"""
   }
 
   /** The driver records only the LAST 2000 output chars (measured from
     * BENCH_r01/r02: tail_len 2000, metric line truncated at its START →
     * "parsed": null both rounds), so the FINAL line must be self-contained
-    * JSON comfortably inside that window. Format ladder, richest that fits
-    * [[MaxShortLine]]: (1) qNN keys at adaptive precision; (2) strip the
-    * 'q' prefix (keys stay unique — they're the qNN numbers); (3) decisecond
-    * values as "N.d" seconds; (4) INTEGER deciseconds (`"165":37` = 3.7 s),
-    * self-described by a `"qunit":"ds"` marker so no consumer can misread
-    * the per-query unit — the total `value` stays SECONDS on every rung.
-    * Rung 4 saves ~2 chars/entry over rung 3 and holds per-query keys to
-    * ~240 registered queries (the r10 regression: at 198 queries rungs 1-3
-    * all overflowed and the ladder fell to the keyless fallback, so
-    * BENCH_r10.json parsed with no per-query data); (5/6) past rung 4's
-    * wall, keep integer-decisecond keys for the SLOWEST K queries that
-    * fit and roll the remainder up PER FAMILY (rung 6, r12 verdict ask
-    * #4) into `"others":{"batch":{"n":R,"sec":S.SS},…}` with "stream" /
-    * "recipe" / "batch" sub-objects — the expensive tail (what a perf
-    * audit reads) stays per-query at any registry size, nothing is
-    * silently dropped (keys + Σ others.*.n always equals the suite
-    * size), and a streaming gate falling out of the keyed set would
-    * surface as a LOUD non-empty "stream" remainder instead of hiding
-    * inside an undifferentiated fast tail. Rung 6 adapts K, so the
-    * ladder has no next wall; the keyless fallback below it is a
-    * dead-man's backstop only. The full-name full-precision line prints
-    * FIRST either way, so humans and BENCH_NOTES always get the rich
-    * form. */
+    * JSON comfortably inside that window. One format, at any registry
+    * size: the SLOWEST K queries that fit [[MaxShortLine]] keyed by their
+    * qNN number ('q' stripped) with INTEGER-decisecond values
+    * (`"165":37` = 3.7 s), self-described by a `"qunit":"ds"` marker; the
+    * unkeyed remainder rolled up PER FAMILY into
+    * `"others":{"batch":{"n":R,"sec":S.SS},…}` with "stream" / "recipe" /
+    * "batch" sub-objects. The total `value` stays SECONDS. The expensive
+    * tail (what a perf audit reads) stays per-query, nothing is silently
+    * dropped (keys + Σ others.*.n always equals the suite size), and a
+    * streaming gate falling out of the keyed set surfaces as a LOUD
+    * non-empty "stream" remainder. K adapts, so the format has no wall;
+    * the keyless line below it is a dead-man's backstop only. Full
+    * precision lives in the full-name line printed FIRST and in
+    * `target/bench_full.json`. */
   // The driver tail window also swallows sbt's OWN trailer after our
   // line — "[success] Total time: NNN s (HH:MM), completed <date>" ≈
   // 81-85 chars + newlines. BENCH_r12 proved the cost of ignoring it:
@@ -227,20 +189,12 @@ object Bench {
   private[graft] def shortLine(entries: Seq[(String, Double)],
       nFailed: Int = 0): String = {
     val failSuffix = if (nFailed == 0) "" else s""","failed":$nFailed"""
-    val stripped = entries.map { case (k, v) => k.stripPrefix("q") -> v }
-    val ladder = Iterator(
-      jsonLine(entries, fmtAdaptive, failSuffix),
-      jsonLine(stripped, fmtAdaptive, failSuffix),
-      jsonLine(stripped,
-        v => "%.1f".formatLocal(java.util.Locale.ROOT, v), failSuffix),
-      jsonLine(stripped, v => math.round(v * 10).toString,
-        s""","qunit":"ds"$failSuffix""", totalFmt = fmt2)) ++
-      Iterator(topKLine(stripped, failSuffix))
-    ladder.find(_.length <= MaxShortLine)
-      .getOrElse(s"""{"metric":"total","value":${fmt2(entries.map(_._2).sum)},"unit":"sec"$failSuffix}""")
+    val line = topKLine(entries.map { case (k, v) => k.stripPrefix("q") -> v }, failSuffix)
+    if (line.length <= MaxShortLine) line
+    else s"""{"metric":"total","value":${fmt2(entries.map(_._2).sum)},"unit":"sec"$failSuffix}"""
   }
 
-  /** Rung 6: a maximal slowest-K prefix whose line fits [[MaxShortLine]],
+  /** A maximal slowest-K prefix whose line fits [[MaxShortLine]],
     * with the unkeyed remainder broken down PER FAMILY
     * ([[SparkEntry.familyOf]]): `"others":{"stream":{"n":…,"sec":…},
     * "recipe":{…},"batch":{…}}`, empty families omitted. Exact

@@ -25,12 +25,7 @@ object StoreMicro {
   def main(args: Array[String]): Unit = {
     val appends = args.lift(0).map(_.toInt).getOrElse(40)
     val rows = args.lift(1).map(_.toInt).getOrElse(20000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.build()
     val work = java.nio.file.Files.createTempDirectory("graft_storemicro").toString
 
     def batch(i: Int) = spark.range(rows.toLong)

@@ -87,15 +87,7 @@ object Verify {
       System.err.println(s"[verify] unknown query names: ${unknown.mkString(", ")}")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.build()
     val qs = if (only.isEmpty) SparkEntry.queries
              else SparkEntry.queries.filter { case (k, _) => only(k) }
     val os = if (only.isEmpty) SparkEntry.oracleSql

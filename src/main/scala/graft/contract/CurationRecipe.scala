@@ -1,6 +1,6 @@
 package graft.contract
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** END-TO-END CURATION RECIPE — contract-as-code for the LLM-pretraining
@@ -413,8 +413,4 @@ final case class CurationRecipe(
         col("__c").isNull -> "near_dup"))
     out.select(col(idCol), stage.as("stage"), col("split"))
   }
-
-  /** Execute against a registered source. */
-  def runOn(spark: SparkSession, source: graft.sources.BatchSource): DataFrame =
-    run(source.read(spark))
 }

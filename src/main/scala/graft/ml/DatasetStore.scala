@@ -25,17 +25,14 @@ final class DatasetStore(rootDir: String) {
         counts.map { case (n, c) => s"${q(n)}: $c" }.mkString(",") + "}") ++
         meta.map { case (k, v) => s"${q(k)}: ${q(v)}" }
       ).mkString("{", ",", "}")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(manifestPath(id)), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    graft.sources.PathProbe.writeUtf8(spark, manifestPath(id), json)
   }
 
   def load(spark: SparkSession, id: String, split: String): DataFrame =
     spark.read.parquet(dir(id, split))
 
   def exists(spark: SparkSession, id: String): Boolean =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(manifestPath(id)))
+    graft.sources.PathProbe.exists(spark, manifestPath(id))
 
   /** save once, then always reload the SAME split rows (split stability —
     * the reason the reference caches splits instead of recomputing). */

@@ -7,9 +7,6 @@ import org.apache.spark.sql.functions.{col, struct, when}
   */
 object Caching {
 
-  /** In-memory cache (InMemoryCacheJob, retrieval_job.py:1683-1702). */
-  def inMemory(df: DataFrame): DataFrame = df.cache()
-
   /** Write-through file cache (FileCachedJob / cached_at,
     * retrieval_job.py:2775-2817): if the cache path exists and is younger than
     * maxAge, read it; otherwise compute, write, and read back. Reading back
@@ -17,8 +14,7 @@ object Caching {
     * materialized files, like the reference. */
   def fileCached(spark: SparkSession, path: String,
       maxAge: Option[java.time.Duration] = None)(compute: => DataFrame): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val (fs, p) = graft.sources.PathProbe.resolve(spark, path)
     val fresh = fs.exists(p) && maxAge.forall { age =>
       System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime < age.toMillis
     }

@@ -38,11 +38,29 @@ trait WritableSource extends BatchSource {
   def upsert(df: DataFrame, keys: Seq[String]): Unit
 }
 
-/** Filesystem-path helpers shared by the file-backed sources. */
+/** Filesystem-path helpers shared by the file-backed sources and stores.
+  * Every path resolves on its OWN filesystem (`Path.getFileSystem`), never
+  * the default one: an s3a:// or abfss:// path under an hdfs:// default
+  * would otherwise fail with "Wrong FS". */
 private[graft] object PathProbe {
-  def exists(spark: SparkSession, path: String): Boolean = {
+  def resolve(spark: SparkSession,
+      path: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val (fs, p) = resolve(spark, path)
+    fs.exists(p)
+  }
+  def writeUtf8(spark: SparkSession, path: String, text: String): Unit = {
+    val (fs, p) = resolve(spark, path)
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+  def readUtf8(spark: SparkSession, path: String): String = {
+    val (fs, p) = resolve(spark, path)
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 }
 
@@ -536,13 +554,12 @@ private[graft] object GenLog {
     }
 
   /** Default auto-compaction threshold: SPARK_GRAFT_LOG_COMPACT_EVERY
-    * (strictly parsed — shares [[graft.streaming.Streaming.parsePositiveInt]]
-    * with SPARK_GRAFT_GATE_WIDTH), else 32. A `def`, so a bad env value
-    * throws the named IllegalArgumentException at store CONSTRUCTION —
-    * not an ExceptionInInitializerError from a companion initializer. */
+    * (strictly parsed by [[graft.LocalSession.envInt]]), else 32. A `def`,
+    * so a bad env value throws the named IllegalArgumentException at store
+    * CONSTRUCTION — not an ExceptionInInitializerError from a companion
+    * initializer. */
   def defaultAutoCompactEvery: Int =
-    graft.streaming.Streaming.parsePositiveInt("SPARK_GRAFT_LOG_COMPACT_EVERY",
-      sys.env.get("SPARK_GRAFT_LOG_COMPACT_EVERY"), default = 32)
+    graft.LocalSession.envInt("SPARK_GRAFT_LOG_COMPACT_EVERY", default = 32)
 
   /** Drop all cached counters so the next touch re-seeds from the directory
     * — simulates a process restart for the recovery spec. */

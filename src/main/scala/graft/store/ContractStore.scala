@@ -27,21 +27,6 @@ final class ContractStore {
   @volatile private var modelsMap: Map[String, ModelContract] = Map.empty
   @volatile private var recipesMap: Map[String, graft.contract.CurationRecipe] = Map.empty
 
-  /** PIT physical strategy: "sorted" (default — union + one per-key window
-    * pass, O(facts+features) rows; the 100 TB path) or "join" (equi-join +
-    * rank dedup, the reference's own Spark shape, local/job.py:678-699).
-    * Both produce identical results (JoinsSpec equivalence tests); "join"
-    * can win when the feature side is a small broadcastable dimension.
-    * SPARK_GRAFT_PIT_STRATEGY overrides the default for a whole process —
-    * the scale-measurement A/B knob (SCALE.md's sorted-vs-join table), so
-    * the same registered queries time both physical forms unmodified. */
-  @volatile private var pitStrategyVal: String = ContractStore.defaultPitStrategy
-  def pitStrategy: String = pitStrategyVal
-  def withPitStrategy(s: String): ContractStore = {
-    require(s == "sorted" || s == "join", s"unknown PIT strategy: $s")
-    pitStrategyVal = s; this
-  }
-
   def addView(v: FeatureView): ContractStore =
     synchronized { viewsMap += v.name -> v; this }
   def addModel(m: ModelContract): ContractStore =
@@ -56,6 +41,19 @@ final class ContractStore {
   def view(name: String): ViewStore = new ViewStore(this, viewsMap(name))
   def model(name: String): ModelStore = new ModelStore(this, modelsMap(name))
 
+  /** The one feature-ref parser (RawStringFeatureRequest,
+    * feature_store.py:108-145): `view:feature` or `location:view:feature`
+    * → (view, feature); any other shape throws IllegalArgumentException. */
+  private def parseRef(ref: String): (String, String) = ref.split(":") match {
+    case Array(v, f) => (v, f)
+    case Array(_, v, f) => (v, f)
+    case _ => throw new IllegalArgumentException(s"bad feature ref: $ref")
+  }
+
+  /** Refs grouped by view, each view's features in request order. */
+  private def refsByView(refs: Seq[String]): Map[String, Seq[String]] =
+    refs.map(parseRef).groupBy(_._1).map { case (v, fs) => v -> fs.map(_._2) }
+
   /** Persist every serializable view contract as a JSON registry file (the
     * analog of the reference's contract store JSON,
     * ContractStore.as_json/from_json). Views with opaque code sources are
@@ -68,18 +66,13 @@ final class ContractStore {
     val recipes = recipesMap.values.toSeq.sortBy(_.name)
       .map(graft.contract.ContractJson.recipeToJson).mkString("[", ",\n", "]")
     val json = s"""{"views":$views,\n"models":$models,\n"recipes":$recipes}"""
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    graft.sources.PathProbe.writeUtf8(spark, path, json)
   }
 
   def loadFrom(spark: SparkSession, path: String,
       rebindSources: Map[String, graft.sources.BatchSource] = Map.empty,
       rebindModels: Map[String, graft.ml.ExposedModel] = Map.empty): ContractStore = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val trimmed = json.trim
+    val trimmed = graft.sources.PathProbe.readUtf8(spark, path).trim
     if (trimmed.startsWith("[")) {
       // legacy registry: a bare array of view objects, split on the ",\n"
       // boundaries the old writer emitted
@@ -209,10 +202,8 @@ final class ContractStore {
           .map(_.allFeatureNames.toSet))
     modelsMap.values.toSeq.sortBy(_.name).map { m =>
       m.name -> m.inputFeatures.filter { ref =>
-        ref.split(":") match {
-          case Array(loc, feat) => !schemaOf(loc).exists(_.contains(feat))
-          case _ => true
-        }
+        try { val (v, feat) = parseRef(ref); !schemaOf(v).exists(_.contains(feat)) }
+        catch { case _: IllegalArgumentException => true }
       }
     }.filter(_._2.nonEmpty).toMap
   }
@@ -445,7 +436,7 @@ final class ContractStore {
     * (the reference's list-handling path). */
   def loadFeature(spark: SparkSession, df: DataFrame, ref: String,
       explodeCol: Option[String] = None): DataFrame = {
-    val Array(viewName, featName) = ref.split(":")
+    val (viewName, featName) = parseRef(ref)
     val v = viewsMap(viewName)
     val keys = v.entities.map(_.name)
     val lookup = new ViewStore(this, v).baseWithDerived(spark)
@@ -494,14 +485,8 @@ final class ContractStore {
     */
   def featuresFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
       factTs: String = "event_timestamp"): DataFrame = {
-    // 1. parse refs, group by view (RawStringFeatureRequest, feature_store.py:108-145)
-    val byView = refs.map { r =>
-      r.split(":") match {
-        case Array(v, f) => (v, f)
-        case Array(_, v, f) => (v, f)
-        case _ => throw new IllegalArgumentException(s"bad feature ref: $r")
-      }
-    }.groupBy(_._1).map { case (v, fs) => v -> fs.map(_._2) }
+    // 1. parse refs, group by view
+    val byView = refsByView(refs)
 
     // 2. per view: assemble the needed frame and PIT-join onto the entity frame.
     // Features already present on the entity frame are satisfied — drop them
@@ -523,11 +508,7 @@ final class ContractStore {
           if (plainWanted.nonEmpty) {
             val feat = vs.baseWithDerived(spark)
               .select((keys :+ ts.name).map(col) ++ plainWanted.map(col): _*)
-            cur =
-              if (pitStrategyVal == "sorted")
-                Joins.pointInTimeSorted(cur, feat, keys, ts.name, factTs, ts.ttl)
-              else
-                Joins.pointInTimeJoin(cur, feat, keys, ts.name, factTs, ts.ttl)
+            cur = Joins.pointInTimeSorted(cur, feat, keys, ts.name, factTs, ts.ttl)
           }
           if (aggs.nonEmpty) {
             val base = vs.baseWithDerived(spark)
@@ -570,13 +551,7 @@ final class ContractStore {
     * surface as nulls, like a missing HMGET key. */
   def onlineFeaturesFor(spark: SparkSession, entities: DataFrame, refs: Seq[String],
       maxInlineKeys: Int = 1024): DataFrame = {
-    val byView = refs.map { r =>
-      r.split(":") match {
-        case Array(v, f) => (v, f)
-        case Array(_, v, f) => (v, f)
-        case _ => throw new IllegalArgumentException(s"bad feature ref: $r")
-      }
-    }.groupBy(_._1).map { case (v, fs) => v -> fs.map(_._2) }
+    val byView = refsByView(refs)
 
     byView.foldLeft(entities) { case (acc, (viewName, wantedRaw)) =>
       val wanted = wantedRaw.filterNot(acc.columns.contains)
@@ -646,20 +621,6 @@ final class ContractStore {
       }
     }
   }
-}
-
-object ContractStore {
-  /** Process-wide default for new stores' PIT strategy. A `def`, evaluated
-    * at each store construction: a typo'd env value then throws the named
-    * IllegalArgumentException directly — a companion-val would surface as
-    * ExceptionInInitializerError once and opaque NoClassDefFoundError on
-    * every later use in the JVM (ADVICE r14). */
-  private[store] def defaultPitStrategy: String =
-    sys.env.get("SPARK_GRAFT_PIT_STRATEGY").map { v =>
-      require(v == "sorted" || v == "join",
-        s"SPARK_GRAFT_PIT_STRATEGY must be 'sorted' or 'join', got '$v'")
-      v
-    }.getOrElse("sorted")
 }
 
 /** Per-view query surface (reference: FeatureViewStore, feature_store.py:1461+). */

@@ -441,16 +441,6 @@ object Streaming {
 
   // ---- runtime-gate harness (q165/q167): TEST staging + store run ----
 
-  private def gateLap(): (String => Unit, Boolean) = {
-    val debugT = sys.env.contains("GRAFT_STREAM_DEBUG")
-    var t0 = System.nanoTime()
-    val lap = (tag: String) => if (debugT) {
-      System.err.println(f"[stream-gate] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      t0 = System.nanoTime()
-    }
-    (lap, debugT)
-  }
-
   /** Stage `df` as a time-ordered multi-file parquet stream dir — the TEST
     * harness half of the runtime gates (a real deployment's stream arrives
     * time-ordered from the broker). Global sort with full-column tiebreak
@@ -459,7 +449,7 @@ object Streaming {
     * overtakes incoming data; ascending mtimes pin the file-source
     * processing order. */
   private def stageChunks(df: DataFrame, tsCol: String, chunks: Int,
-      work: java.nio.file.Path, lap: String => Unit): Unit = {
+      work: java.nio.file.Path): Unit = {
     import org.apache.spark.sql.expressions.Window
     val inDir = work.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     // localCheckpoint: each chunk filter re-reads the sorted frame instead
@@ -502,27 +492,24 @@ object Streaming {
       target.toFile.setLastModified(System.currentTimeMillis() + k * 2000L)
     }
     ranked.unpersist(blocking = false) // staged to disk; release the checkpoint blocks
-    lap("staging")
   }
 
   /** Handle the shared harness of one staged runtime gate hands its body:
-    * the work dir, the lap logger, and the staged file-stream source (one
-    * micro-batch per chunk, so state genuinely carries across batches). */
-  private final class StagedGate(val work: java.nio.file.Path,
-      val lap: String => Unit, val debugT: Boolean,
+    * the work dir, the gate width (read once, see [[withStagedGate]]), and
+    * the staged file-stream source (one micro-batch per chunk, so state
+    * genuinely carries across batches). */
+  private final class StagedGate(val work: java.nio.file.Path, width: Int,
       spark: SparkSession, schema: org.apache.spark.sql.types.StructType) {
     def source: DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(work.resolve("in").toString)
+
+    /** Sink-side batch narrowing: one task at the deterministic width-1
+      * gate (tiny store, task constants dominate), untouched at scale
+      * widths where a batch is corpus-shaped and coalesce(1) would
+      * single-thread the whole upsert chain. */
+    def coalesce(df: DataFrame): DataFrame = if (width == 1) df.coalesce(1) else df
   }
 
-  /** The shared preamble/epilogue of every staged runtime gate (held ONCE
-    * so a harness fix cannot silently diverge one gate): resolve/create
-    * the work dir, stage `df` as `orderCol`-ordered chunks, pin
-    * `spark.sql.shuffle.partitions=1` for the streaming lifecycle — the
-    * stateful agg + per-batch upserts move store-scale data (windows ×
-    * keys), not corpus-scale, so a wide micro-batch fan-out only adds
-    * state-store and task overhead per batch — and restore the session's
-    * width after, exception paths included. */
   /** The staged gates' online store: a [[graft.sources.LogUpsertSource]] —
     * each micro-batch APPENDS under a new generation and the final read
     * resolves keys to their latest emission. Chosen by measurement
@@ -544,40 +531,27 @@ object Streaming {
     graft.sources.LogUpsertSource(work.resolve(sub).toString, keys,
       boundFiles = false)
 
-  /** Strict positive-int env parse, shared by SPARK_GRAFT_GATE_WIDTH and
-    * the log stores' SPARK_GRAFT_LOG_COMPACT_EVERY
-    * ([[graft.sources.GenLog.defaultAutoCompactEvery]]). */
-  private[graft] def parsePositiveInt(name: String, raw: Option[String], default: Int): Int =
-    raw.map { v =>
-      val n = try v.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$name must be a positive integer, got '$v'")
-      }
-      require(n > 0, s"$name must be > 0, got '$v'")
-      n
-    }.getOrElse(default)
-
   /** Parse SPARK_GRAFT_GATE_WIDTH: must be a positive integer; fails fast
     * naming the env var (an unparseable value would otherwise surface as an
     * opaque Spark error deep in the gate lifecycle). */
   private[graft] def parseGateWidth(raw: Option[String]): Int =
-    parsePositiveInt("SPARK_GRAFT_GATE_WIDTH", raw, default = 1)
+    graft.LocalSession.parsePositiveInt("SPARK_GRAFT_GATE_WIDTH", raw, default = 1)
 
-  /** Sink-side batch narrowing: one task at the deterministic width-1 gate
-    * (tiny store, task constants dominate), untouched at scale widths where
-    * a batch is corpus-shaped and coalesce(1) would single-thread the whole
-    * upsert chain. */
-  private def gateCoalesce(df: DataFrame): DataFrame =
-    if (parseGateWidth(sys.env.get("SPARK_GRAFT_GATE_WIDTH")) == 1) df.coalesce(1) else df
-
+  /** The shared preamble/epilogue of every staged runtime gate (held ONCE
+    * so a harness fix cannot silently diverge one gate): resolve/create
+    * the work dir, stage `df` as `orderCol`-ordered chunks, pin
+    * `spark.sql.shuffle.partitions=1` for the streaming lifecycle — the
+    * stateful agg + per-batch upserts move store-scale data (windows ×
+    * keys), not corpus-scale, so a wide micro-batch fan-out only adds
+    * state-store and task overhead per batch — and restore the session's
+    * width after, exception paths included. */
   private def withStagedGate[T](spark: SparkSession, df: DataFrame,
       orderCol: String, chunks: Int, workDir: Option[String])(
       body: StagedGate => T): T = {
     val work = workDir.map(d => java.nio.file.Paths.get(d))
       .getOrElse(java.nio.file.Files.createTempDirectory("graft_stream_gate"))
     java.nio.file.Files.createDirectories(work)
-    val (lap, debugT) = gateLap()
-    stageChunks(df, orderCol, chunks, work, lap)
+    stageChunks(df, orderCol, chunks, work)
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     // Gate width: shuffle/state partitions for the streaming lifecycle.
     // Default 1 is right at driver-test scale (state is tiny; a wide
@@ -595,7 +569,7 @@ object Streaming {
     // gates pin — so only scale measurements should set this
     val gateWidth = parseGateWidth(sys.env.get("SPARK_GRAFT_GATE_WIDTH"))
     spark.conf.set("spark.sql.shuffle.partitions", gateWidth.toString)
-    try body(new StagedGate(work, lap, debugT, spark, df.schema))
+    try body(new StagedGate(work, gateWidth, spark, df.schema))
     finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
@@ -603,42 +577,35 @@ object Streaming {
     * per-batch `project`ed rows upsert through [[idempotentBatchSink]]
     * (empty watermark-finalize batches skip the upsert job chain), the
     * query drains with processAllAvailable, and the store source is
-    * returned. [[gateCoalesce]] on the batch: at the default width-1 gate
+    * returned. [[StagedGate.coalesce]] on the batch: at the default width-1 gate
     * the store is tiny and one task per upsert beats a fan-out; at scale
     * widths a micro-batch is millions of rows and a forced coalesce(1)
     * single-threads the whole sink chain — measured at ×100 state density
     * as part of the q176/q177 residual (SCALE.md). */
   private def runUpsertStream(spark: SparkSession, streamed: DataFrame,
       project: DataFrame => DataFrame, keys: Seq[String],
-      work: java.nio.file.Path, lap: String => Unit,
-      debugT: Boolean, outputMode: String = "update"): graft.sources.WritableSource = {
-    val store = gateStore(work, "store", keys)
+      g: StagedGate, outputMode: String = "update"): graft.sources.WritableSource = {
+    val store = gateStore(g.work, "store", keys)
     val upsert = idempotentBatchSink({ (batch, _) =>
       // ONE action per micro-batch (optimization r15): the former
       // persist + isEmpty probe ran a whole extra job per batch — and the
       // probe's executeTake(1) re-computed the full stateful pipeline, so
-      // it COST more than the upsert it guarded (GRAFT_STREAM_DEBUG
-      // decomposition: isEmpty 0.15-1.3 s/batch vs upsert 0.11-0.38 s).
+      // it COST more than the upsert it guarded (per-batch decomposition,
+      // r15: isEmpty 0.15-1.3 s/batch vs upsert 0.11-0.38 s).
       // Empty watermark-finalize batches are NO-OPS on the log stores
       // (GenLog.resolveEmptyGen: the empty generation is dropped and its
       // claim released — unless it is the store's FIRST generation, kept
       // as the schema donor), so they neither advance the log nor pull
       // the O(tail) auto-compaction forward, and the final read is
       // unchanged.
-      val tV = System.nanoTime()
-      store.upsert(gateCoalesce(project(batch)), keys)
-      if (debugT) System.err.println(f"[stream-gate]   upsert ${(System.nanoTime() - tV) / 1e9}%.2fs")
-      },
-      work.resolve("commitlog").toString)(spark)
+      store.upsert(g.coalesce(project(batch)), keys)
+    }, g.work.resolve("commitlog").toString)(spark)
     val q = streamed.writeStream
       .outputMode(outputMode)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        upsert(b, id); lap(s"batch-$id")
-      }
+      .option("checkpointLocation", g.work.resolve("ckpt").toString)
+      .foreachBatch { (b: DataFrame, id: Long) => upsert(b, id) }
       .start()
     try { q.processAllAvailable() } finally q.stop()
-    lap("stream")
     // an all-empty input never triggers an upsert, so the store path would
     // not exist and the final read would throw — materialize the empty
     // store with the projected schema instead of crashing on zero events
@@ -690,7 +657,7 @@ object Streaming {
       runUpsertStream(spark, agg,
         b => b.select(col("window.start").cast("long").as("window_start"),
           col(keyCol), col("n_events"), col("__sum_dec")),
-        Seq("window_start", keyCol), g.work, g.lap, g.debugT)
+        Seq("window_start", keyCol), g)
     }
     store.read(spark).select(col("window_start"), col(keyCol),
       col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
@@ -738,9 +705,8 @@ object Streaming {
             sum(col(valueCol).cast("decimal(18,4)")).as("__sum_dec")),
         b => b.select(col("window.start").cast("long").as("window_start"),
           col(keyCol), col("n_events"), col("__sum_dec")),
-        Seq("window_start", keyCol), g.work, g.lap, g.debugT)
+        Seq("window_start", keyCol), g)
       lifecycle() // phase 1: partial corpus, graceful stop
-      g.lap("phase1-down")
       // the outage: late chunks arrive while no query is running
       held.foreach(f => java.nio.file.Files.move(hold.resolve(f.getName), f.toPath))
       lifecycle() // phase 2: new query, same checkpoint — state recovers
@@ -834,13 +800,13 @@ object Streaming {
         // no isEmpty probe: it cost a whole extra pipeline execution per
         // batch (see runUpsertStream); empty batches mint tolerated empty
         // generations
-        st.upsert(gateCoalesce(project(batch)), keys)
+        st.upsert(g.coalesce(project(batch)), keys)
       }, g.work.resolve("commitlog").toString)(spark)
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
       val q1 = agg.writeStream.outputMode("update")
         .option("checkpointLocation", g.work.resolve("ckpt").toString)
         .foreachBatch { (b: DataFrame, id: Long) =>
-          upsert(b, id); g.lap(s"p1-batch-$id")
+          upsert(b, id)
           if (id == crashAtBatch) {
             crashed.set(true)
             throw new RuntimeException(
@@ -855,11 +821,10 @@ object Streaming {
       }
       require(crashed.get(), "stagedCrashRecoveryRun: the injected crash " +
         s"never fired — fewer than ${crashAtBatch + 1} micro-batches ran")
-      g.lap("phase1-crashed")
       // phase 2: fresh query, same checkpoint/commitlog/store paths (all
       // derive from g.work) — replay of the torn batch is absorbed, the
       // rest of the corpus drains
-      runUpsertStream(spark, agg, project, keys, g.work, g.lap, g.debugT)
+      runUpsertStream(spark, agg, project, keys, g)
     }
     store.read(spark).select(col("window_start"), col(keyCol),
       col("n_events"), col("__sum_dec").cast("double").as("sum_value"))
@@ -897,7 +862,7 @@ object Streaming {
         .groupBy(col(keyCol), col("hll_bucket"))
         .agg(max(col("__rho")).as("hll_reg"))
       runUpsertStream(spark, regs, identity,
-        Seq(keyCol, "hll_bucket"), g.work, g.lap, g.debugT)
+        Seq(keyCol, "hll_bucket"), g)
     }
     graft.ops.Aggregations.hllPortableEstimate(store.read(spark), Seq(keyCol), lgK)
   }
@@ -942,7 +907,7 @@ object Streaming {
         .groupBy(col(keyCol), col("cms_depth"), col("cms_slot"))
         .agg(count(lit(1)).as("cms_n"))
       runUpsertStream(spark, counters, identity,
-        Seq(keyCol, "cms_depth", "cms_slot"), g.work, g.lap, g.debugT)
+        Seq(keyCol, "cms_depth", "cms_slot"), g)
     }
     store.read(spark)
   }
@@ -961,7 +926,7 @@ object Streaming {
       chunks: Int = 3, workDir: Option[String] = None): DataFrame = {
     val store = withStagedGate(spark, events, tsCol, chunks, workDir) { g =>
       runUpsertStream(spark, statefulLatest(g.source, keys, tsCol, tieCol),
-        identity, keys, g.work, g.lap, g.debugT)
+        identity, keys, g)
     }
     store.read(spark)
   }
@@ -1002,7 +967,7 @@ object Streaming {
       // incoming batch — dedup the batch itself (est is a pure function of
       // the pair, so any representative row is THE row)
       runUpsertStream(spark, pairs, _.dropDuplicates("id_a", "id_b"),
-        Seq("id_a", "id_b"), g.work, g.lap, g.debugT, outputMode = "append")
+        Seq("id_a", "id_b"), g, outputMode = "append")
     }
     require(acc.value == 0L, s"stagedNearDupRun: ${acc.value} bucket evictions " +
       s"at maxPerBucket=$maxPerBucket — the batch-oracle equivalence requires " +
@@ -1026,7 +991,7 @@ object Streaming {
       workDir: Option[String] = None): DataFrame = {
     val store = withStagedGate(spark, rows, tsCol, chunks, workDir) { g =>
       runUpsertStream(spark, dedupStream(g.source, keys, tsCol, delay),
-        identity, keys, g.work, g.lap, g.debugT, outputMode = "append")
+        identity, keys, g, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1083,7 +1048,7 @@ object Streaming {
       runUpsertStream(spark, agg,
         b => b.select(unix_micros(col("session_window.start")).as("session_start"),
           col(keyCol), col("n_events"), col("__sum_dec")),
-        Seq("session_start", keyCol), g.work, g.lap, g.debugT,
+        Seq("session_start", keyCol), g,
         outputMode = "append")
     }
     store.read(spark).select(col("session_start"), col(keyCol),
@@ -1132,7 +1097,7 @@ object Streaming {
         .select(keys.map(col) :+ col("a_id") :+ col("b_id") :+
           (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"): _*)
       runUpsertStream(spark, joined, identity, Seq("a_id", "b_id"),
-        g.work, g.lap, g.debugT, outputMode = "append")
+        g, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1222,7 +1187,7 @@ object Streaming {
           coalesce(col("b_id"), lit(-1L)).as("b_id_key") :+
           (unix_micros(col("b_ts")) - unix_micros(col("a_ts"))).as("lag_us"): _*)
       runUpsertStream(spark, joined, identity, Seq("a_id", "b_id_key"),
-        g.work, g.lap, g.debugT, outputMode = "append")
+        g, outputMode = "append")
     }
     // the sentinels cannot reach the store (see above): the left one never
     // evicts, the right one never matches — nothing to filter out
@@ -1270,7 +1235,7 @@ object Streaming {
         " version) before enriching")
     val store = withStagedGate(spark, rows, orderCol, chunks, workDir) { g =>
       runUpsertStream(spark, g.source.join(broadcast(dim), joinKeys, "left"),
-        identity, Seq(idCol), g.work, g.lap, g.debugT, outputMode = "append")
+        identity, Seq(idCol), g, outputMode = "append")
     }
     store.read(spark)
   }
@@ -1306,16 +1271,15 @@ object Streaming {
         // no isEmpty probes here or in the trigger sink: each probe was an
         // extra job per batch (runWorker already persists the batch for its
         // two consumers); empty batches mint tolerated empty generations
-        mainStore.upsert(gateCoalesce(batch), Seq(idCol))
+        mainStore.upsert(g.coalesce(batch), Seq(idCol))
       }, g.work.resolve("commitlog").toString)(spark)
       val q = runWorker(g.source, view,
         sink = mainSink,
         triggers = Seq(EventTrigger(condition,
-          matched => trigStore.upsert(gateCoalesce(matched), Seq(idCol)))),
+          matched => trigStore.upsert(g.coalesce(matched), Seq(idCol)))),
         checkpointDir = Some(g.work.resolve("ckpt").toString),
         trigger = Trigger.ProcessingTime(0L))
       try q.processAllAvailable() finally q.stop()
-      g.lap("stream")
       // a run where nothing matched must yield an EMPTY frame with the
       // pipeline schema, not a missing-path read error; the main store is
       // the schema donor (it saw every batch). An all-empty INPUT is a

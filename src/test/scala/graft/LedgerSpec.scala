@@ -163,25 +163,27 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("short line stays parseable with per-query keys at the current suite size") {
-    // rung history: the registry outgrew the q-prefixed form at 166
-    // queries (→ rung 2, 'q' stripped, centisecond), rung 2's centisecond
-    // form at ~180 (→ rung 3, decisecond values), and rung 3 at 198 (the
-    // BENCH_r10 parsed-null regression → rung 4, integer deciseconds with
-    // a "qunit":"ds" marker). The pins that matter at the REAL registry
-    // size: per-query keys never drop to the keyless bottom fallback, the
-    // line parses with every key, and it stays inside the driver tail
-    // window. The full-name full-precision line prints FIRST either way,
-    // so BENCH_NOTES keeps centiseconds.
+    // format history: the short line was once a five-rung ladder (qNN
+    // keys at centiseconds, 'q' stripped, deciseconds, integer
+    // deciseconds, then slowest-K + per-family others), each rung added
+    // when the registry outgrew the last (166, ~180, 198 — the BENCH_r10
+    // parsed-null regression — and ~240 queries). Past ~240 queries only
+    // the last rung ever fired, so it is now the one format. The pins
+    // that matter at the REAL registry size: per-query data never drops
+    // to the keyless backstop, every query is accounted for, and the line
+    // stays inside the 2000-char tail window. The full-name full-precision
+    // line prints FIRST and lands in target/bench_full.json, so
+    // BENCH_NOTES keeps centiseconds.
     val n = SparkEntry.queries.size // track the real registry, not a constant
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     // a line "keeps per-query data" when every suite member is accounted
-    // for: either its own key, or (rung 5) membership in the explicit
-    // others remainder — keys + others.n must equal the suite size
+    // for: either its own key, or membership in the explicit others
+    // remainder — keys + others.n must equal the suite size
     def accountedQueries(line: String): Int = {
       val node = mapper.readTree(line)
       val qs = node.get("queries")
       assert(qs != null, s"line lost the queries map: $line")
-      // rung 6: the remainder is per-family sub-objects — sum their n's
+      // the remainder is per-family sub-objects — sum their n's
       val others = if (!node.has("others")) 0
         else {
           val it = node.get("others").elements()
@@ -195,16 +197,14 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line.length <= Bench.MaxShortLine, s"len=${line.length}")
     assert(accountedQueries(line) == n,
       s"short line dropped query keys at $n queries")
-    // EARLY WARNING at +10% registry growth: when this margin assertion
-    // starts failing, the NEXT rung must land BEFORE the real registry
-    // hits the wall — the r10 lesson is that the first visible symptom
-    // otherwise is a silently keyless driver artifact. (Rung 5 adapts its
-    // K, so this should now hold at any size — the assertion stays as the
-    // dead-man's tripwire on the whole ladder.)
+    // EARLY WARNING at +10% registry growth — the r10 lesson is that the
+    // first visible symptom of an outgrown format is a silently keyless
+    // bench artifact. (The slowest-K format adapts its K, so this should
+    // hold at any size — the assertion stays as the dead-man's tripwire.)
     val grown = (n * 1.1).toInt
     val gl = Bench.shortLine(entries(grown))
     assert(gl.length <= Bench.MaxShortLine && accountedQueries(gl) == grown,
-      s"ladder has no rung for $grown queries (registry $n +10%) — add one now")
+      s"short line loses per-query data at $grown queries (registry $n +10%)")
   }
 
   test("rung 6: slowest-K keys + exact per-family others accounting at 300 queries") {
@@ -315,18 +315,26 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("rung 4: integer deciseconds, qunit marker, total stays seconds") {
-    // 210 adversarial entries overflow rungs 1-3 (measured: rung 3 is
-    // ~1960 chars at 198) so rung 4 must fire — and be self-describing
+    // 210 adversarial entries (once the input that forced the retired
+    // integer-decisecond rung): the one format keys the slow entries,
+    // marks its unit and keeps the total in seconds
     val es = entries(210)
     val line = Bench.shortLine(es)
     assert(line.length <= Bench.MaxShortLine, s"len=${line.length}")
-    assert(line.contains("\"qunit\":\"ds\""), "rung 4 must carry the unit marker")
+    assert(line.contains("\"qunit\":\"ds\""), "the short line must carry the unit marker")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(line)
-    assert(node.get("queries").size == 210)
-    // per-query values are integers (deciseconds): 12.34 s → 123
-    assert(node.get("queries").get("40").asText == "123")
-    assert(node.get("queries").get("40").isIntegralNumber)
+    val qs = node.get("queries")
+    // every entry is accounted for: its own key or the others remainder
+    val others = node.get("others").elements()
+    var othersN = 0
+    while (others.hasNext) othersN += others.next().get("n").asInt
+    assert(qs.size + othersN == 210, "every query accounted for")
+    // every slow (12.34 s) entry is keyed, as integer deciseconds → 123
+    (40 to 200 by 40).foreach { i =>
+      assert(qs.has(i.toString), s"slow query q$i missing from the keys")
+      assert(qs.get(i.toString).isIntegralNumber && qs.get(i.toString).asInt == 123)
+    }
     // the headline total is still seconds at centisecond precision
     val expectedTotal = es.map(_._2).sum
     assert(math.abs(node.get("value").asDouble - expectedTotal) < 0.01,
@@ -364,10 +372,11 @@ class BenchLineSpec extends AnyFunSuite {
     assert(mapper.readTree(weird).get("sf").asText == "/tmp/we\"ird")
   }
 
-  test("adaptive precision: centiseconds under 10 s, deciseconds above") {
-    val line = Bench.shortLine(Seq("q1" -> 0.123, "q2" -> 12.345))
-    assert(line.contains("\"q1\":0.12"))
-    assert(line.contains("\"q2\":12.3") && !line.contains("12.35") && !line.contains("12.34"))
+  test("short-line values are integer deciseconds: 0.123 s -> 1, 12.345 s -> 123") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val qs = mapper.readTree(Bench.shortLine(Seq("q1" -> 0.123, "q2" -> 12.345))).get("queries")
+    assert(qs.get("1").isIntegralNumber && qs.get("1").asInt == 1)
+    assert(qs.get("2").isIntegralNumber && qs.get("2").asInt == 123)
   }
 
   test("emitted lines are valid JSON with every query key (jackson parse)") {

@@ -150,3 +150,43 @@ class GenFilesBoundSpec extends AnyFunSuite {
       "the partition check started a Spark job")
   }
 }
+
+/** Store paths resolve on their OWN filesystem, not the default one: a
+  * registry, a dataset manifest and a file cache under a non-default
+  * scheme (`faulty://`, no fault armed) all round-trip. */
+class OwnFileSystemSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def dir(): String = {
+    FaultyLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    s"${FaultyLocalFileSystem.Scheme}://" +
+      java.nio.file.Files.createTempDirectory("graft_ownfs").toString
+  }
+
+  test("ContractStore.saveTo/loadFrom round-trip a registry on a non-default scheme") {
+    import graft.contract._
+    import graft.core.FeatureType._
+    val path = s"${dir()}/registry.json"
+    val v = FeatureView("signals", graft.sources.ParquetSource("/data/signals"),
+      entities = Seq(Feature("id", FInt64)), features = Seq(Feature("clicks", FInt64)))
+    new graft.store.ContractStore().addView(v).saveTo(spark, path)
+    val back = new graft.store.ContractStore().loadFrom(spark, path)
+    assert(back.views.keySet == Set("signals"))
+    assert(ContractJson.toJson(back.views("signals")) == ContractJson.toJson(v))
+  }
+
+  test("DatasetStore and Caching.fileCached work on a non-default scheme") {
+    val root = dir()
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val ds = new graft.ml.DatasetStore(s"$root/datasets")
+    assert(!ds.exists(spark, "d1"))
+    assert(ds.saveOrLoad(spark, "d1", "train")(Map("train" -> df)).count() == 2)
+    assert(ds.exists(spark, "d1"))
+    var computed = 0
+    def make = { computed += 1; df }
+    val first = graft.ops.Caching.fileCached(spark, s"$root/cache")(make)
+    val second = graft.ops.Caching.fileCached(spark, s"$root/cache")(make)
+    assert(first.count() == 2 && second.count() == 2 && computed == 1)
+  }
+}

@@ -413,12 +413,17 @@ class ScalePathSpec extends AnyFunSuite {
       eventTimestamp = Some(EventTimestamp("ts", Some(java.time.Duration.ofDays(1)))))
     val facts = ev.filter($"event_type" === "purchase")
       .select($"event_id", $"user_id", $"ts".as("event_timestamp"))
-    def run(strategy: String) =
-      new graft.store.ContractStore().addView(v).withPitStrategy(strategy)
-        .featuresFor(spark, facts, Seq("sviews:value"))
-        .select("event_id", "value").collect()
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "value").collect()
         .map(r => (r.getLong(0), Option(r.get(1)))).toMap
-    assert(run("sorted") == run("join"))
+    // the store always runs the sorted PIT join; the equi-join + rank
+    // reference over the same view frame, TTL included, must agree
+    val store = new graft.store.ContractStore().addView(v)
+    val viewFrame = store.view("sviews").baseWithDerived(spark)
+      .select("user_id", "ts", "value")
+    val reference = Joins.pointInTimeJoin(facts, viewFrame, Seq("user_id"), "ts",
+      "event_timestamp", v.eventTimestamp.flatMap(_.ttl))
+    assert(canon(store.featuresFor(spark, facts, Seq("sviews:value"))) == canon(reference))
   }
 
   test("native kernels callable from SQL after registration") {
@@ -3049,7 +3054,7 @@ class LogUpsertSourceSpec extends AnyFunSuite {
     // degenerate every-append fold
     intercept[IllegalArgumentException](LogUpsertSource(dir, Seq("id"), 1))
     intercept[IllegalArgumentException](
-      graft.streaming.Streaming.parsePositiveInt(
+      graft.LocalSession.parsePositiveInt(
         "SPARK_GRAFT_LOG_COMPACT_EVERY", Some("nope"), 32))
   }
 
@@ -3824,6 +3829,7 @@ class ModelChecksSpec extends AnyFunSuite {
         "signals:clicks",      // plain feature — ok
         "signals:ctr",         // derived feature — ok
         "scorer:score",        // another model's prediction view — ok
+        "feature_view:signals:clicks", // location-qualified ref — ok
         "signals:ghost",       // missing feature
         "nosuch:feat",         // missing view
         "malformed"))          // unparseable ref
@@ -3832,6 +3838,25 @@ class ModelChecksSpec extends AnyFunSuite {
     val report = store.checkModelFeatures()
     assert(report.keySet == Set("ranker"))
     assert(report("ranker") == Seq("signals:ghost", "nosuch:feat", "malformed"))
+  }
+
+  test("a malformed feature ref fails with the named IllegalArgumentException") {
+    import spark.implicits._
+    val v = FeatureView("signals", graft.sources.CustomSource(s => { import s.implicits._
+        Seq((1L, 5L)).toDF("id", "clicks") }),
+      entities = Seq(Feature("id", FInt64)),
+      features = Seq(Feature("clicks", FInt64)))
+    val store = new graft.store.ContractStore().addView(v)
+    val entities = Seq(1L).toDF("id")
+    for (ref <- Seq("malformed", "a:b:c:d")) {
+      val ex = intercept[IllegalArgumentException](store.loadFeature(spark, entities, ref))
+      assert(ex.getMessage.contains(s"bad feature ref: $ref"))
+      intercept[IllegalArgumentException](store.featuresFor(spark, entities, Seq(ref)))
+      intercept[IllegalArgumentException](store.onlineFeaturesFor(spark, entities, Seq(ref)))
+    }
+    // the location-qualified form resolves on every entry point
+    val viaLoad = store.loadFeature(spark, entities, "feature_view:signals:clicks")
+    assert(viaLoad.select("clicks").as[Long].collect().toSeq == Seq(5L))
   }
 
   test("diffModel classifies input-set, prediction-view and scorer changes") {
